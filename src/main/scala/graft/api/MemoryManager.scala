@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -74,12 +74,20 @@ final class MemoryManager(
   // scoped reads (F1/F3)
   // ------------------------------------------------------------------
 
-  private def scopeCol(df: DataFrame): DataFrame =
-    df.filter(FilterOps.scopeFilter(config.scopeFilters))
+  /** F3 — the configured tenant scope over memory rows. */
+  private def memoryScope: Column = FilterOps.scopeFilter(config.scopeFilters)
+
+  /** The tenant scope over entity rows: the user, plus the graph when
+    * one is configured.
+    */
+  private def entityScope: Column = {
+    val user = col("user_id") === config.userId
+    config.graphName.map(g => user && col("graph_name") === g).getOrElse(user)
+  }
 
   /** S1 — scoped label scan of memories. */
   def scopedMemories(includeExpired: Boolean = false): DataFrame = {
-    val base = scopeCol(store.memories)
+    val base = store.memories.filter(memoryScope)
     if (includeExpired) base else base.filter(col("expired_at").isNull)
   }
 
@@ -87,8 +95,12 @@ final class MemoryManager(
   // W1/W2/W3 — add pipeline
   // ------------------------------------------------------------------
 
-  /** W1 — full add pipeline (manager.py:197-326). Deterministic when the
-    * injected traits and `now` are.
+  /** W1 — one add (manager.py:197-326): the [[addReconcileBatch]]
+    * pipeline over a one-item batch, so an add makes the same bounded
+    * number of store mutations whatever its fact count. `infer = false`
+    * stores the text verbatim as one ADD, with no extraction and no
+    * candidate search. Deterministic when the injected traits and `now`
+    * are.
     */
   def add(
       text: String,
@@ -104,57 +116,8 @@ final class MemoryManager(
   ): AddResult = lockFor(config.userId).synchronized {
     tracer.span("memory.add", Map("user" -> config.userId, "infer" -> infer.toString)) {
     usageIncr("add")
-    val ts = now.getOrElse(clock())
-    if (!infer) {
-      val id = createMemory(text, Some(embedder.embedOne(text)), ts,
-        memoryType, sessionId, runId, actorId, role, metadata, validAt = None,
-        importance = importance)
-      recordHistory("ADD", id, ts, None, Some(text), actorId, role)
-      linkSessionOrEpisode(Seq(id), Nil, text, sessionId, runId, ts)
-      AddResult(Seq(MemoryEvent("ADD", Some(id.toString), text)))
-    } else {
-      // combined extraction with the reference's fallback ladder:
-      // combined fails → separate facts + entities legs
-      // (extraction/entities.py:96-132)
-      val extraction =
-        try extractor.extract(text)
-        catch {
-          case scala.util.control.NonFatal(_) =>
-            val facts = extractor.extractFactsOnly(text)
-            val (ents, rels) = extractor.extractEntitiesOnly(text)
-            Extraction(facts, ents, rels)
-        }
-      if (extraction.facts.isEmpty) AddResult(Nil)
-      else {
-        val temporal: Map[Int, TemporalAnnotation] =
-          if (config.enableBitemporal)
-            extractor.annotateTemporal(extraction.facts).map(a => a.factIndex -> a).toMap
-          else Map.empty
-        val embeddings = embedder.embed(extraction.facts)
-        val candidates = candidateSearch(extraction.facts, embeddings, memoryType)
-        val decisions =
-          if (candidates.isEmpty)
-            // fast path: nothing to reconcile against → all ADD without a
-            // model call (reconciliation/memories.py:88-90)
-            extraction.facts.map(f => Decision(DecisionAction.Add, f, None))
-          else reconciler.reconcile(extraction.facts, candidates)
-        val events = executeDecisions(decisions, embeddings, temporal, ts,
-          memoryType, sessionId, runId, actorId, role, metadata, importance,
-          knownTexts = candidates.toMap)
-        storeGraph(extraction, events.flatMap(_.memoryId).map(_.toLong))
-        // session chains link only ADD events (manager.py:315 filters
-        // e.action == MemoryAction.ADD), but the episode's PRODUCED
-        // edges cover EVERY event carrying a memory id — _create_episode
-        // receives the full events list (manager.py:316, 1252-1255);
-        // episode creation requires a non-empty event list
-        linkSessionOrEpisode(
-          events.filter(_.event == "ADD").flatMap(_.memoryId).map(_.toLong),
-          extraction.entities, text, sessionId, runId, ts,
-          hasEvents = events.nonEmpty,
-          producedIds = events.flatMap(_.memoryId).map(_.toLong).distinct)
-        AddResult(events)
-      }
-    }
+    ingest(Seq(text), infer, memoryType, sessionId, runId, actorId, role,
+      metadata, now.getOrElse(clock()), importance).head
     }
   }
 
@@ -220,45 +183,53 @@ final class MemoryManager(
     }
   }
 
-  /** W2 at batch scale — set-oriented reconciliation ingest: the whole
-    * per-add pipeline (extract → embed → candidate search → reconcile →
-    * SCD2 execute → graph/episode store) over a batch of texts with a
-    * BOUNDED number of distributed operations, independent of batch
-    * size: one embed call for all facts, ONE candidate-search job, one
-    * embed call for all update texts, one lookup for off-candidate
-    * targets, one lookup for inherited entity edges, then one append /
-    * patch per table. The reference's loop is sequential by contract
-    * (manager.py:339-343 — each add sees the store its predecessors
-    * left); this is the documented scale alternative for corpus-refresh
-    * ingest, where per-add driver round-trips dominate (B6 measured the
-    * loop at ≈1 add/s; BASELINE §8).
+  /** W2 at batch scale — the add pipeline (extract → embed → candidate
+    * search → reconcile → SCD2 execute → graph/episode store) over a
+    * batch of texts with a BOUNDED number of distributed operations,
+    * independent of batch size: one embed call for all facts, ONE
+    * candidate-search job, one embed call for all update texts, one
+    * lookup for off-candidate targets, one lookup for inherited entity
+    * edges, then one append / patch per table. The reference's loop is
+    * sequential by contract (manager.py:339-343 — each add sees the
+    * store its predecessors left); this is the scale alternative for
+    * corpus-refresh ingest, where per-add driver round-trips dominate
+    * (B6 measured the loop at ≈1 add/s; BASELINE §8). [[add]] is the
+    * one-item case of the same pipeline.
     *
-    * INTRA-BATCH SEMANTICS (the documented contract):
+    * SEMANTICS (one contract for a batch and for a single add):
     *   - Candidates and reconciliation targets resolve against the
     *     PRE-BATCH store snapshot. Facts from different batch items do
-    *     not see each other as candidates, and a memory created by item
-    *     i is never a target for item j.
-    *   - If several decisions expire the same target, the expiry
-    *     applies once (all share the batch timestamp; first decision's
-    *     bitemporal invalid_at wins); every such decision still records
-    *     its own history event, exactly as the sequential loop would at
-    *     equal timestamps.
+    *     not see each other as candidates, and a memory created in the
+    *     batch is never a target.
+    *   - Decisions expiring the same target patch it once: expired_at
+    *     is the batch timestamp, and in bitemporal mode the LAST such
+    *     decision carrying an invalid_at sets it (a DELETE carries none)
+    *     — what one patch per decision would leave. Every decision
+    *     still records its own history event.
     *   - An UPDATE/DELETE whose target is absent from the pre-batch
-    *     store behaves like the sequential path: no expiry patch, but
-    *     the UPDATE still creates its memory/supersedes edge/history
-    *     row (with old_text = null).
-    *   - Entity upsert is one merged first-appearance pass; on a
-    *     conflict-free batch the assigned ids equal the sequential
-    *     loop's. Relation reconciliation consults pre-batch relation
-    *     edges only.
-    *   - Episode NEXT_EPISODE / session LEADS_TO chains link the batch
-    *     linearly: the pre-batch predecessor is resolved once (after
-    *     batch expiries), then item i chains to item i+1. The
-    *     sequential path's same-call quirk (an item's own UPDATE-created
-    *     memory can become its chain predecessor) is intentionally not
-    *     reproduced — the linear chain is what a batch caller means.
+    *     store expires nothing, but the UPDATE still creates its
+    *     memory/supersedes edge/history row (with old_text = null).
+    *   - An item without facts writes nothing, and an item's relations
+    *     are stored only when the item also has entities.
+    *   - Entity upsert is one merged first-appearance pass over the
+    *     graph-scoped entities; HAS_ENTITY, RELATION and episode
+    *     MENTIONS edges all use the ids it returns. Relation
+    *     reconciliation consults pre-batch relation edges, and asks the
+    *     reconciler only about items with existing triples around their
+    *     entities.
+    *   - Episode NEXT_EPISODE chains resolve the pre-batch predecessor
+    *     once, then link item i to item i+1. A session LEADS_TO chain
+    *     follows the reference's rule per item (manager.py:1182-1223):
+    *     the predecessor of the item's first ADD is the latest
+    *     (created_at, id) non-expired chain memory outside the item's
+    *     ADD ids — possibly the item's own UPDATE-created memory. Its
+    *     pre-batch part resolves once, after all of the batch's
+    *     expiries.
     *
-    * Returns one [[AddResult]] per input text, index-aligned.
+    * On a conflict-free batch (no item's decisions touch another item's
+    * targets or chain predecessor) the store lands in the state the
+    * sequential add loop leaves. Returns one [[AddResult]] per input
+    * text, index-aligned.
     */
   def addReconcileBatch(
       texts: Seq[String],
@@ -273,21 +244,49 @@ final class MemoryManager(
   ): Seq[AddResult] = lockFor(config.userId).synchronized {
     tracer.span("memory.add_reconcile_batch", Map("n" -> texts.size.toString)) {
     usageIncr("add_reconcile_batch")
-    if (texts.isEmpty) return Seq.empty
-    val ts = now.getOrElse(clock())
+    if (texts.isEmpty) Seq.empty
+    else ingest(texts, infer = true, memoryType, sessionId, runId, actorId,
+      role, metadata, now.getOrElse(clock()), importance)
+    }
+  }
 
-    // 1. extraction per item — same combined→separate fallback ladder as add()
+  /** The one ingest pipeline behind [[add]] and [[addReconcileBatch]];
+    * its contract is documented on the latter. `infer = false` makes
+    * each text one verbatim ADD fact: no extraction, temporal annotation
+    * or candidate search.
+    */
+  private def ingest(
+      texts: Seq[String],
+      infer: Boolean,
+      memoryType: String,
+      sessionId: Option[String],
+      runId: Option[String],
+      actorId: Option[String],
+      role: Option[String],
+      metadata: Option[String],
+      ts: Long,
+      importance: Double
+  ): Seq[AddResult] = {
+    // 1. extraction per item with the reference's fallback ladder:
+    // combined fails → separate facts + entities legs
+    // (extraction/entities.py:96-132). An item writes graph state only
+    // alongside facts, and relations only alongside entities
     val extractions = texts.map { text =>
-      try extractor.extract(text)
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          val facts = extractor.extractFactsOnly(text)
-          val (ents, rels) = extractor.extractEntitiesOnly(text)
-          Extraction(facts, ents, rels)
-      }
+      val ex =
+        if (!infer) Extraction(Seq(text), Nil, Nil)
+        else try extractor.extract(text)
+        catch {
+          case scala.util.control.NonFatal(_) =>
+            val facts = extractor.extractFactsOnly(text)
+            val (ents, rels) = extractor.extractEntitiesOnly(text)
+            Extraction(facts, ents, rels)
+        }
+      if (ex.facts.isEmpty) Extraction(Nil, Nil, Nil)
+      else if (ex.entities.isEmpty) ex.copy(relations = Nil)
+      else ex
     }
     val temporal: Seq[Map[Int, TemporalAnnotation]] = extractions.map { ex =>
-      if (config.enableBitemporal && ex.facts.nonEmpty)
+      if (infer && config.enableBitemporal && ex.facts.nonEmpty)
         extractor.annotateTemporal(ex.facts).map(a => a.factIndex -> a).toMap
       else Map.empty
     }
@@ -297,8 +296,10 @@ final class MemoryManager(
     val allEmbs = if (allFacts.isEmpty) Seq.empty else embedder.embed(allFacts)
     val offsets = extractions.scanLeft(0)(_ + _.facts.size)
 
-    // 3. ONE candidate-search job against the pre-batch store
-    val perFact = candidateRowsPerFact(allFacts, allEmbs, memoryType)
+    // 3. ONE candidate search against the pre-batch store
+    val perFact =
+      if (infer && allFacts.nonEmpty) candidateRowsPerFact(allFacts, allEmbs, memoryType)
+      else allFacts.map(_ => Seq.empty[(Long, String)])
 
     // 4. per-item reconcile (driver trait call, like the loop): each
     // item's candidates = its facts' rows, fact-major/rank-minor,
@@ -308,8 +309,10 @@ final class MemoryManager(
     }
     val decisionsPerItem: Seq[Seq[Decision]] = extractions.zipWithIndex.map {
       case (ex, i) =>
-        if (ex.facts.isEmpty) Nil
-        else if (candsPerItem(i).isEmpty)
+        if (candsPerItem(i).isEmpty)
+          // fast path: nothing to reconcile against → all ADD without a
+          // model call (reconciliation/memories.py:88-90); a factless
+          // item has no candidates and so no decisions
           ex.facts.map(f => Decision(DecisionAction.Add, f, None))
         else reconciler.reconcile(ex.facts, candsPerItem(i))
     }
@@ -337,6 +340,8 @@ final class MemoryManager(
     val updTargets = decisionsPerItem.flatten.collect {
       case d if d.action == DecisionAction.Update && d.targetMemoryId.nonEmpty =>
         d.targetMemoryId.get }.distinct
+    // J10 — a superseding memory inherits its target's HAS_ENTITY edges
+    // (manager.py:1153-1180)
     val inheritedEnts: Map[Long, Seq[Long]] =
       if (updTargets.isEmpty) Map.empty
       else store.edges
@@ -346,9 +351,10 @@ final class MemoryManager(
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct }
 
-    // 6. drive the decision loop ON THE DRIVER, accumulating rows;
-    // memory/history ids are assigned in the sequential loop's visit
-    // order, so a conflict-free batch lands with identical ids
+    // 6. the SCD2 decision executor (manager.py:854-1035), ON THE
+    // DRIVER, accumulating rows; memory/history ids are assigned in the
+    // sequential loop's visit order, so a conflict-free batch lands with
+    // identical ids
     val newMems = Vector.newBuilder[MemoryRow]
     val histRows = Vector.newBuilder[HistoryRow]
     val newEdges = Vector.newBuilder[EdgeRow]
@@ -375,10 +381,14 @@ final class MemoryManager(
       newEdges += EdgeRow(store.nextEdgeId(), memoryId, hid,
         EdgeTypes.HasHistory, Map.empty)
     }
+    // W6 — soft expiry; invalid_at only in bitemporal mode
+    // (manager.py:1130-1151). Returns the old text.
     def expire(target: Long, invalidAt: Option[Long]): Option[String] = {
       val known = targetText.get(target)
-      if (known.isDefined && !expiries.contains(target))
-        expiries(target) = if (config.enableBitemporal) invalidAt else None
+      if (known.isDefined) {
+        val inv = if (config.enableBitemporal) invalidAt else None
+        expiries(target) = inv.orElse(expiries.get(target).flatten)
+      }
       known
     }
 
@@ -389,17 +399,7 @@ final class MemoryManager(
       decisions.zipWithIndex.foreach { case (d, i) =>
         val factValidAt = temporal(item).get(i).flatMap(_.validAt)
         d.action match {
-          case DecisionAction.Add =>
-            val id = mkMemory(d.text, itemEmbs.lift(i), factValidAt)
-            mkHistory("ADD", id, None, Some(d.text))
-            events += MemoryEvent("ADD", Some(id.toString), d.text)
-            created += id
-          case DecisionAction.Update if d.targetMemoryId.isEmpty =>
-            val id = mkMemory(d.text, itemEmbs.lift(i), factValidAt)
-            mkHistory("ADD", id, None, Some(d.text))
-            events += MemoryEvent("ADD", Some(id.toString), d.text)
-            created += id
-          case DecisionAction.Update =>
+          case DecisionAction.Update if d.targetMemoryId.nonEmpty =>
             val target = d.targetMemoryId.get
             val oldText = expire(target, Some(factValidAt.getOrElse(ts)))
             val id = mkMemory(d.text, Some(updateEmbs.next()), factValidAt)
@@ -411,57 +411,61 @@ final class MemoryManager(
             mkHistory("UPDATE", id, oldText, Some(d.text))
             events += MemoryEvent("UPDATE", Some(id.toString), d.text, oldText)
             created += id
-          case DecisionAction.Delete if d.targetMemoryId.isEmpty => ()
-          case DecisionAction.Delete =>
+          case DecisionAction.Add | DecisionAction.Update =>
+            // UPDATE without target downgrades to ADD (manager.py:910-943)
+            val id = mkMemory(d.text, itemEmbs.lift(i), factValidAt)
+            mkHistory("ADD", id, None, Some(d.text))
+            events += MemoryEvent("ADD", Some(id.toString), d.text)
+            created += id
+          case DecisionAction.Delete if d.targetMemoryId.nonEmpty =>
             val target = d.targetMemoryId.get
             val oldText = expire(target, None)
             mkHistory("DELETE", target, oldText, None)
             events += MemoryEvent("DELETE", Some(target.toString),
               oldText.getOrElse(""), oldText)
-          case DecisionAction.None => ()
+          case _ => () // NONE; DELETE without target is skipped (manager.py:1003)
         }
       }
       eventsPerItem += events.toSeq
       createdPerItem += created.toSeq
     }
 
-    // 7. graph store, batched: one merged first-appearance entity
-    // upsert (conflict-free ids equal the sequential loop's), HAS_ENTITY
-    // cross products per item, relation reconciliation vs the PRE-BATCH
+    // 7. W9/W10 graph store (manager.py:1646-1767), batched: one merged
+    // first-appearance entity upsert (conflict-free ids equal the
+    // sequential loop's); every event memory of an item links to every
+    // entity of the item; relation reconciliation vs the PRE-BATCH
     // relation edges with one delete + one append
-    val allEnts = extractions.flatMap(_.entities)
-    val entityIdsAll: Map[String, Long] = upsertEntities(allEnts)
-    extractions.zipWithIndex.foreach { case (ex, item) =>
-      if (ex.entities.nonEmpty) {
-        val itemEntIds = ex.entities.flatMap(e => entityIdsAll.get(e.name))
-          .distinct.sorted
-        for {
-          m <- eventsPerItem(item).flatMap(_.memoryId).map(_.toLong)
-          e <- itemEntIds
-        } newEdges += EdgeRow(store.nextEdgeId(), m, e, EdgeTypes.HasEntity,
-          Map.empty)
-      }
+    val entityIds = upsertEntities(extractions.flatMap(_.entities))
+    val itemEntIds: Seq[Map[String, Long]] =
+      extractions.map(_.entities.map(e => e.name -> entityIds(e.name)).toMap)
+    val itemEntSorted = itemEntIds.map(_.values.toSeq.sorted)
+    extractions.indices.foreach { item =>
+      for {
+        m <- eventsPerItem(item).flatMap(_.memoryId).map(_.toLong)
+        e <- itemEntSorted(item)
+      } newEdges += EdgeRow(store.nextEdgeId(), m, e, EdgeTypes.HasEntity,
+        Map.empty)
     }
-    val itemsWithRels = extractions.filter(_.relations.nonEmpty)
+    val itemsWithRels = extractions.indices.filter(extractions(_).relations.nonEmpty)
     if (itemsWithRels.nonEmpty) {
-      val touched = itemsWithRels
-        .flatMap(_.entities.flatMap(e => entityIdsAll.get(e.name))).distinct
-      val existing = existingRelations(touched)
+      val existing = existingRelations(itemsWithRels.flatMap(itemEntSorted(_)).distinct)
       val names =
         if (existing.isEmpty) Map.empty[Long, String]
         else store.entities
           .filter(col("id").isin(existing.flatMap(e => Seq(e._2, e._3)).distinct: _*))
           .select(col("id"), col("name")).collect()
           .map(r => r.getLong(0) -> r.getString(1)).toMap
-      val deleteIds = itemsWithRels.flatMap { ex =>
-        val itemEntIds = ex.entities.flatMap(e => entityIdsAll.get(e.name)).toSet
-        val itemTriples = existing.filter(e => itemEntIds.contains(e._2))
+      // the reconciler picks existing triples to drop; delete the FIRST
+      // matching edge per rejected (source, target, relation_type)
+      val deleteIds = itemsWithRels.flatMap { item =>
+        val ids = itemEntSorted(item).toSet
+        val itemTriples = existing.filter(e => ids.contains(e._2))
           .map { case (eid, s, t, rt) =>
             (eid, ExtractedRelation(names.getOrElse(s, s.toString),
               names.getOrElse(t, t.toString), rt)) }
-        val toDelete = reconciler.reconcileRelations(
-          ex.relations, itemTriples.map(_._2))
-        toDelete.flatMap { d =>
+        if (itemTriples.isEmpty) Nil
+        else reconciler.reconcileRelations(extractions(item).relations,
+            itemTriples.map(_._2)).flatMap { d =>
           itemTriples.find { case (_, r) =>
             r.source == d.source && r.target == d.target &&
               r.relationType == d.relationType
@@ -469,11 +473,11 @@ final class MemoryManager(
         }
       }.distinct
       store.deleteEdgesById(deleteIds)
-      itemsWithRels.foreach { ex =>
-        ex.relations.foreach { r =>
+      itemsWithRels.foreach { item =>
+        extractions(item).relations.foreach { r =>
           for {
-            s <- entityIdsAll.get(r.source)
-            t <- entityIdsAll.get(r.target)
+            s <- itemEntIds(item).get(r.source)
+            t <- itemEntIds(item).get(r.target)
           } newEdges += EdgeRow(store.nextEdgeId(), s, t, EdgeTypes.Relation,
             Map("relation_type" -> r.relationType))
         }
@@ -498,13 +502,15 @@ final class MemoryManager(
     }
     store.appendHistory(histRows.result())
 
-    // 9. linear batch chaining: pre-batch predecessor resolved ONCE
-    // (post-expiry), then item → item within the batch
+    // 9. W11/J11 — episodes with PRODUCED/MENTIONS/NEXT_EPISODE, or the
+    // LEADS_TO session chain (manager.py:1182-1307). The chain key must
+    // match what newMemoryRow STORES in run_id (runId.orElse(config.runId))
+    // or the predecessor lookup never matches when config.runId is set;
+    // reference: config.run_id or sid (manager.py:314)
     val chainKey = runId.orElse(config.runId).orElse(sessionId)
     if (config.enableEpisodes) {
       var prevEp: Option[Long] =
-        if (chainKey.isEmpty) None
-        else chainKey.flatMap { key =>
+        chainKey.filter(_ => eventsPerItem.exists(_.nonEmpty)).flatMap { key =>
           store.episodes
             .filter(col("user_id") === config.userId &&
               (col("run_id") === key ||
@@ -514,6 +520,9 @@ final class MemoryManager(
         }
       val epRows = Vector.newBuilder[EpisodeRow]
       texts.indices.foreach { item =>
+        // episode creation needs events; its PRODUCED edges cover EVERY
+        // event carrying a memory id (manager.py:316, 1252-1255). Rows
+        // store the EFFECTIVE run id, which the chain lookup matches
         if (eventsPerItem(item).nonEmpty) {
           val epId = store.nextEpisodeId()
           epRows += EpisodeRow(epId, texts(item), "message", config.userId,
@@ -521,9 +530,7 @@ final class MemoryManager(
           val prodIds = eventsPerItem(item).flatMap(_.memoryId).map(_.toLong).distinct
           prodIds.foreach(m => newEdges += EdgeRow(store.nextEdgeId(), epId,
             m, EdgeTypes.Produced, Map.empty))
-          val mentioned = extractions(item).entities
-            .flatMap(e => entityIdsAll.get(e.name)).distinct.sorted
-          mentioned.foreach(e => newEdges += EdgeRow(store.nextEdgeId(),
+          itemEntSorted(item).foreach(e => newEdges += EdgeRow(store.nextEdgeId(),
             epId, e, EdgeTypes.Mentions, Map.empty))
           if (chainKey.nonEmpty) {
             prevEp.foreach(p => newEdges += EdgeRow(store.nextEdgeId(), p,
@@ -534,60 +541,53 @@ final class MemoryManager(
       }
       store.appendEpisodes(epRows.result())
     } else chainKey.foreach { key =>
-      val createdAll = createdPerItem.flatten.toSeq
-      var prev: Option[Long] =
-        if (createdPerItem.forall(_.isEmpty)) None
-        else scopeCol(store.memories)
-          .filter(col("expired_at").isNull &&
-            !col("id").isin(createdAll: _*) &&
+      // session chains link only ADD events (manager.py:315)
+      val addIds = eventsPerItem.map(_.filter(_.event == "ADD")
+        .flatMap(_.memoryId).map(_.toLong))
+      if (addIds.exists(_.nonEmpty)) {
+        // batch-created rows all carry ts, so among them the highest id
+        // is the latest
+        val preBatch: Option[(Long, Long)] = scopedMemories()
+          .filter(!col("id").isin(createdPerItem.flatten.toSeq: _*) &&
             (coalesce(col("run_id"), col("session_id")) === key))
           .orderBy(col("created_at").desc, col("id").desc)
-          .select(col("id")).collect().headOption.map(_.getLong(0))
-      texts.indices.foreach { item =>
-        val addIds = eventsPerItem(item).filter(_.event == "ADD")
-          .flatMap(_.memoryId).map(_.toLong)
-        if (addIds.nonEmpty) {
-          prev.foreach(p => newEdges += EdgeRow(store.nextEdgeId(), p,
-            addIds.head, EdgeTypes.LeadsTo, Map("sequence" -> "0")))
-          addIds.sliding(2).zipWithIndex.foreach {
-            case (Seq(a, b), i) => newEdges += EdgeRow(store.nextEdgeId(),
-              a, b, EdgeTypes.LeadsTo, Map("sequence" -> (i + 1).toString))
-            case _ => ()
+          .select(col("created_at"), col("id")).collect().headOption
+          .map(r => (r.getLong(0), r.getLong(1)))
+        var earlier: Option[Long] = None // latest memory of earlier items
+        texts.indices.foreach { item =>
+          val adds = addIds(item)
+          if (adds.nonEmpty) {
+            val batchPrev =
+              (earlier ++ createdPerItem(item).filterNot(adds.contains)).maxOption
+            val prev = (preBatch ++ batchPrev.map(ts -> _)).maxOption.map(_._2)
+            // sequence numbering mirrors manager.py:1211-1221: prev→new[0]
+            // is 0; new[i]→new[i+1] is ALWAYS i+1 (even without a prev)
+            prev.foreach(p => newEdges += EdgeRow(store.nextEdgeId(), p,
+              adds.head, EdgeTypes.LeadsTo, Map("sequence" -> "0")))
+            adds.sliding(2).zipWithIndex.foreach {
+              case (Seq(a, b), i) => newEdges += EdgeRow(store.nextEdgeId(),
+                a, b, EdgeTypes.LeadsTo, Map("sequence" -> (i + 1).toString))
+              case _ => ()
+            }
           }
+          earlier = (earlier ++ createdPerItem(item)).maxOption
         }
-        if (createdPerItem(item).nonEmpty)
-          prev = Some(createdPerItem(item).last)
       }
     }
     store.appendEdges(newEdges.result())
     eventsPerItem.map(AddResult(_)).toSeq
-    }
   }
 
-  /** J12 — reconciliation-candidate search: top-k cosine per fact above
-    * the threshold over the user's non-expired memories, dedup across
-    * facts first-wins (search/vector.py:294-348). One distributed job
-    * for all facts.
-    */
-  private def candidateSearch(
-      facts: Seq[String],
-      embeddings: Seq[Array[Float]],
-      memoryType: String = MemoryTypes.Semantic
-  ): Seq[(Long, String)] =
-    // flatten is fact-major / rank-minor, so first-fact-wins dedup over
-    // the per-fact rows reproduces the original flat contract exactly
-    candidateRowsPerFact(facts, embeddings, memoryType)
-      .flatten.distinctBy(_._1)
-
-  /** J12, per-fact shape: rank-ordered candidate rows for EACH fact
-    * (index-aligned with `facts`), before any cross-fact dedup — the
-    * form [[addReconcileBatch]] needs, where facts from different batch
-    * items must not dedup against each other.
+  /** J12 — reconciliation-candidate search (search/vector.py:294-348):
+    * rank-ordered top-k cosine rows above the threshold over the user's
+    * non-expired memories for EACH fact (index-aligned with `facts`),
+    * before any cross-fact dedup — facts from different batch items must
+    * not dedup against each other.
     */
   private def candidateRowsPerFact(
       facts: Seq[String],
       embeddings: Seq[Array[Float]],
-      memoryType: String = MemoryTypes.Semantic
+      memoryType: String
   ): Seq[Seq[(Long, String)]] = tracer.span("memory.candidate_search",
       Map("facts" -> facts.size.toString)) {
     // non-semantic adds reconcile only against their own type
@@ -646,70 +646,6 @@ final class MemoryManager(
     }
   }
 
-  /** W2 — the SCD2 decision executor (manager.py:854-1035). */
-  private def executeDecisions(
-      decisions: Seq[Decision],
-      embeddings: Seq[Array[Float]],
-      temporal: Map[Int, TemporalAnnotation],
-      ts: Long,
-      memoryType: String,
-      sessionId: Option[String],
-      runId: Option[String],
-      actorId: Option[String],
-      role: Option[String],
-      metadata: Option[String],
-      importance: Double = 1.0,
-      knownTexts: Map[Long, String] = Map.empty // candidate texts already collected
-  ): Seq[MemoryEvent] = {
-    val events = scala.collection.mutable.ArrayBuffer.empty[MemoryEvent]
-    decisions.zipWithIndex.foreach { case (d, i) =>
-      val factValidAt = temporal.get(i).flatMap(_.validAt)
-      d.action match {
-        case DecisionAction.Add =>
-          val emb = embeddings.lift(i)
-          val id = createMemory(d.text, emb, ts, memoryType, sessionId,
-            runId, actorId, role, metadata, factValidAt, importance)
-          recordHistory("ADD", id, ts, None, Some(d.text), actorId, role)
-          events += MemoryEvent("ADD", Some(id.toString), d.text)
-
-        case DecisionAction.Update if d.targetMemoryId.isEmpty =>
-          // UPDATE without target downgrades to ADD (manager.py:910-943)
-          val emb = embeddings.lift(i)
-          val id = createMemory(d.text, emb, ts, memoryType, sessionId,
-            runId, actorId, role, metadata, factValidAt, importance)
-          recordHistory("ADD", id, ts, None, Some(d.text), actorId, role)
-          events += MemoryEvent("ADD", Some(id.toString), d.text)
-
-        case DecisionAction.Update =>
-          val target = d.targetMemoryId.get
-          val oldText = expireMemory(target, ts, Some(factValidAt.getOrElse(ts)),
-            knownText = knownTexts.get(target))
-          val emb = embedder.embedOne(d.text)
-          val id = createMemory(d.text, Some(emb), ts, memoryType, sessionId,
-            runId, actorId, role, metadata, factValidAt, importance)
-          store.appendEdges(Seq(EdgeRow(store.nextEdgeId(), id, target,
-            EdgeTypes.Supersedes, Map.empty)))
-          inheritEntityEdges(target, id)
-          recordHistory("UPDATE", id, ts, oldText, Some(d.text), actorId, role)
-          events += MemoryEvent("UPDATE", Some(id.toString), d.text, oldText)
-
-        case DecisionAction.Delete if d.targetMemoryId.isEmpty =>
-          () // DELETE without target is skipped (manager.py:1003)
-
-        case DecisionAction.Delete =>
-          val target = d.targetMemoryId.get
-          val oldText = expireMemory(target, ts, None,
-            knownText = knownTexts.get(target))
-          recordHistory("DELETE", target, ts, oldText, None, actorId, role)
-          events += MemoryEvent("DELETE", Some(target.toString),
-            oldText.getOrElse(""), oldText)
-
-        case DecisionAction.None => ()
-      }
-    }
-    events.toSeq
-  }
-
   private def newMemoryRow(
       id: Long,
       text: String,
@@ -762,33 +698,6 @@ final class MemoryManager(
     id
   }
 
-  /** W6 — soft expiry; sets invalid_at only in bitemporal mode
-    * (manager.py:1130-1151). Returns the old text.
-    */
-  private def expireMemory(id: Long, ts: Long, invalidAt: Option[Long],
-      knownText: Option[String] = None): Option[String] = {
-    // the reconcile path already collected the target's text during
-    // candidate search — skip the per-add existence probe when the
-    // caller can vouch for it (per-user lock rules out a concurrent
-    // delete between the two)
-    val cur = knownText.orElse(store.memories.filter(col("id") === id)
-      .select(col("text")).collect().headOption.map(_.getString(0)))
-    if (cur.isDefined) {
-      import spark.implicits._
-      val inv: Option[Long] = if (config.enableBitemporal) invalidAt else None
-      inv match {
-        case Some(v) =>
-          store.patchMemories(
-            Seq((id, ts, v)).toDF("id", "expired_at", "invalid_at"),
-            Seq("expired_at", "invalid_at"))
-        case None =>
-          store.patchMemories(
-            Seq((id, ts)).toDF("id", "expired_at"), Seq("expired_at"))
-      }
-    }
-    cur
-  }
-
   /** W8 — history entry as a History node + HAS_HISTORY edge
     * (history.py:28-60; the non-CDC fallback path is the faithful one).
     */
@@ -808,64 +717,6 @@ final class MemoryManager(
       EdgeTypes.HasHistory, Map.empty)))
   }
 
-  /** J10 — copy HAS_ENTITY edges from a superseded memory to its
-    * replacement (manager.py:1153-1180).
-    */
-  private def inheritEntityEdges(oldId: Long, newId: Long): Unit = {
-    val ents = store.edges
-      .filter(col("edge_type") === EdgeTypes.HasEntity && col("src") === oldId)
-      .select(col("dst")).collect().map(_.getLong(0)).toSeq.distinct
-    store.appendEdges(ents.map(e =>
-      EdgeRow(store.nextEdgeId(), newId, e, EdgeTypes.HasEntity, Map.empty)))
-  }
-
-  /** W9/W10 — entity upsert + HAS_ENTITY/RELATION edge store
-    * (manager.py:1646-1767). Every event memory links to every extracted
-    * entity, matching the reference's cross product.
-    */
-  private def storeGraph(extraction: Extraction, memoryIds: Seq[Long]): Unit = {
-    if (extraction.entities.nonEmpty) {
-      val entityIds: Map[String, Long] = upsertEntities(extraction.entities)
-      store.appendEdges(for {
-        m <- memoryIds
-        e <- entityIds.values.toSeq.sorted
-      } yield EdgeRow(store.nextEdgeId(), m, e, EdgeTypes.HasEntity, Map.empty))
-
-      if (extraction.relations.nonEmpty) {
-        // W10 — relation reconciliation: the trait decides which existing
-        // triples to drop; delete the FIRST matching edge per rejected
-        // (source, target, relation_type), like manager.py:1753-1767
-        val existing = existingRelations(entityIds.values.toSeq)
-        if (existing.nonEmpty) {
-          val names = store.entities
-            .filter(col("id").isin(existing.flatMap(e => Seq(e._2, e._3)).distinct: _*))
-            .select(col("id"), col("name")).collect()
-            .map(r => r.getLong(0) -> r.getString(1)).toMap
-          val existingTriples = existing.map { case (eid, s, t, rt) =>
-            (eid, ExtractedRelation(names.getOrElse(s, s.toString),
-              names.getOrElse(t, t.toString), rt))
-          }
-          val toDelete = reconciler.reconcileRelations(
-            extraction.relations, existingTriples.map(_._2))
-          val deleteIds = toDelete.flatMap { d =>
-            existingTriples.find { case (_, r) =>
-              r.source == d.source && r.target == d.target &&
-                r.relationType == d.relationType
-            }.map(_._1)
-          }.distinct
-          store.deleteEdgesById(deleteIds)
-        }
-        store.appendEdges(extraction.relations.flatMap { r =>
-          for {
-            s <- entityIds.get(r.source)
-            t <- entityIds.get(r.target)
-          } yield EdgeRow(store.nextEdgeId(), s, t, EdgeTypes.Relation,
-            Map("relation_type" -> r.relationType))
-        })
-      }
-    }
-  }
-
   /** W9 — BATCHED entity upsert: one lookup join for every entity of the
     * add and one append for all the misses, replacing the reference's
     * per-entity probe loop (manager.py:1646-1680) — bulk ingest was
@@ -874,11 +725,8 @@ final class MemoryManager(
   private def upsertEntities(ents: Seq[ExtractedEntity]): Map[String, Long] = {
     if (ents.isEmpty) return Map.empty
     val names = ents.map(_.name).distinct
-    val base = store.entities
-      .filter(col("user_id") === config.userId && col("name").isin(names: _*))
-    val scoped = config.graphName
-      .map(g => base.filter(col("graph_name") === g)).getOrElse(base)
-    val existing = scoped
+    val existing = store.entities
+      .filter(entityScope && col("name").isin(names: _*))
       .groupBy(col("name")).agg(min(col("id")).as("id")) // deterministic pick
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // first occurrence wins, extraction order preserved (ids are
@@ -906,81 +754,6 @@ final class MemoryManager(
         r.getMap[String, String](3).getOrElse("relation_type", "")))
       .toSeq
 
-  /** W11/J11 — episode creation + chains, or LEADS_TO session chain
-    * (manager.py:1182-1307).
-    */
-  private def linkSessionOrEpisode(
-      newIds: Seq[Long],
-      entities: Seq[ExtractedEntity],
-      content: String,
-      sessionId: Option[String],
-      runId: Option[String],
-      ts: Long,
-      hasEvents: Boolean = true,
-      producedIds: Seq[Long] = Nil
-  ): Unit = {
-    // chain key must match what newMemoryRow STORES in run_id
-    // (runId.orElse(config.runId)) or the prev-link lookup silently never
-    // matches when config.runId is set; reference: config.run_id or sid
-    // (manager.py:314)
-    val chainKey = runId.orElse(config.runId).orElse(sessionId)
-    if (config.enableEpisodes && hasEvents) {
-      val epId = store.nextEpisodeId()
-      // episode rows store the EFFECTIVE run id (per-call or config) —
-      // the reference stores config.run_id (manager.py:1245-1246) and
-      // the chain lookup below matches coalesce(run_id, session_id)
-      // against chainKey, so the stored value must equal the key or
-      // NEXT_EPISODE linking silently never fires when config.runId set
-      store.appendEpisodes(Seq(EpisodeRow(epId, content, "message",
-        config.userId, ts, sessionId, runId.orElse(config.runId))))
-      val prodIds = if (producedIds.nonEmpty) producedIds else newIds
-      store.appendEdges(prodIds.map(m =>
-        EdgeRow(store.nextEdgeId(), epId, m, EdgeTypes.Produced, Map.empty)))
-      // one lookup for ALL mentioned entities (was a per-entity probe)
-      val entNames = entities.map(_.name).distinct
-      val entIds =
-        if (entNames.isEmpty) Nil
-        else store.entities
-          .filter(col("user_id") === config.userId && col("name").isin(entNames: _*))
-          .groupBy(col("name")).agg(min(col("id")).as("id"))
-          .orderBy(col("id"))
-          .select(col("id")).collect().map(_.getLong(0)).toSeq
-      store.appendEdges(entIds.map(e =>
-        EdgeRow(store.nextEdgeId(), epId, e, EdgeTypes.Mentions, Map.empty)))
-      // NEXT_EPISODE from the previous episode of the same user+run
-      chainKey.foreach { key =>
-        val prev = store.episodes
-          .filter(col("user_id") === config.userId && col("id") =!= epId &&
-            (col("run_id") === key || (col("run_id").isNull && col("session_id") === key)))
-          .orderBy(col("created_at").desc, col("id").desc)
-          .select(col("id")).collect().headOption.map(_.getLong(0))
-        prev.foreach(p => store.appendEdges(Seq(EdgeRow(store.nextEdgeId(),
-          p, epId, EdgeTypes.NextEpisode, Map.empty))))
-      }
-    } else chainKey.foreach { key =>
-      if (newIds.nonEmpty) {
-        // J11 — as-of: latest non-expired memory of this user+run that is
-        // not one of the new ids (manager.py:1182-1223)
-        val prev = scopeCol(store.memories)
-          .filter(col("expired_at").isNull && !col("id").isin(newIds: _*) &&
-            (coalesce(col("run_id"), col("session_id")) === key))
-          .orderBy(col("created_at").desc, col("id").desc)
-          .select(col("id")).collect().headOption.map(_.getLong(0))
-        val chain = prev.toSeq ++ newIds
-        // sequence numbering mirrors manager.py:1211-1221: prev→new[0]
-        // is 0; new[i]→new[i+1] is ALWAYS i+1 (even without a prev)
-        val prevEdge = prev.map(p =>
-          EdgeRow(store.nextEdgeId(), p, newIds.head, EdgeTypes.LeadsTo,
-            Map("sequence" -> "0")))
-        val newEdges = newIds.sliding(2).zipWithIndex.collect {
-          case (Seq(a, b), i) =>
-            EdgeRow(store.nextEdgeId(), a, b, EdgeTypes.LeadsTo,
-              Map("sequence" -> (i + 1).toString))
-        }.toSeq
-        store.appendEdges(prevEdge.toSeq ++ newEdges)
-      }
-    }
-  }
 
   // ------------------------------------------------------------------
   // G1-G4 — whole-graph metrics + communities (manager.py:1585-1644,
@@ -1052,7 +825,7 @@ final class MemoryManager(
   private def bm25PreparedState(): (DataFrame, Long, Double) = this.synchronized {
     if (store.textVersion != bm25MemoKey) {
       val base =
-        if (config.scopedHybridCandidates) scopeCol(store.memories)
+        if (config.scopedHybridCandidates) store.memories.filter(memoryScope)
         else store.memories
       bm25Memo = SearchOps.bm25Prepare(base, "id", "text")
       bm25MemoKey = store.textVersion
@@ -1155,7 +928,7 @@ final class MemoryManager(
         col("community"))
     // feeds both the count diff and the changed-member fetch: one compute
     val memberTbl = entComm
-      .join(scopeCol2(store.entities).select(col("id").as("ent_id"), col("name")), "ent_id")
+      .join(store.entities.filter(entityScope).select(col("id").as("ent_id"), col("name")), "ent_id")
       .select(col("community"), col("ent_id"), col("name"))
       .localCheckpoint()
     val counts = memberTbl.groupBy(col("community"))
@@ -1328,7 +1101,7 @@ final class MemoryManager(
         // the global top-fetchK page can contain zero rows for the
         // querying tenant, starving them of results brute-force search
         // would have found; the post-filter below stays (harmless).
-        val candBase = if (config.scopedHybridCandidates) scopeCol(mem) else mem
+        val candBase = if (config.scopedHybridCandidates) mem.filter(memoryScope) else mem
         val nonEmptyEmb = size(col("embedding")) > 0
         val cand = SearchOps.hybridSearch(
           candBase.withColumn("embedding",
@@ -1338,7 +1111,7 @@ final class MemoryManager(
           preparedBm25 = Some(bm25PreparedState()))
         cand.join(mem, Seq("id"))
           .filter(col("expired_at").isNull && predCol && typeFiltered)
-          .filter(scopeColExpr)
+          .filter(memoryScope)
           .select(col("id"), col("score"))
       }
     }
@@ -1469,8 +1242,6 @@ final class MemoryManager(
     top.map(r => r.copy(relations = rels.getOrElse(r.id, Nil)).toSearchResult)
   }
 
-  private def scopeColExpr = FilterOps.scopeFilter(config.scopeFilters)
-
   /** J2-J4 — graph branch with the reference's exact fallback scores
     * (search/graph.py:89-199): exact-name lookup with lower() fallback;
     * 1-hop score = max(0, cos) or 0.3 without embedding; 2-hop adds
@@ -1488,7 +1259,7 @@ final class MemoryManager(
     if (entities.isEmpty) emptyOut
     else {
       val names = entities.map(_.name)
-      val ents = scopeCol2(store.entities)
+      val ents = store.entities.filter(entityScope)
       // the lowercase fallback is PER ENTITY (graph.py:100-108): an
       // entity with an exact hit keeps it, an entity without one falls
       // back to case-insensitive — not all-or-nothing across the set
@@ -1539,11 +1310,6 @@ final class MemoryManager(
     }
   }
 
-  private def scopeCol2(df: DataFrame): DataFrame = {
-    val base = df.filter(col("user_id") === config.userId)
-    config.graphName.map(g => base.filter(col("graph_name") === g)).getOrElse(base)
-  }
-
   // internal hydrated result row
   private case class ResultRow(
       id: Long, text: String, score: Double, source: String,
@@ -1589,13 +1355,11 @@ final class MemoryManager(
         .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     }
 
-  private def collectResults(df: DataFrame): Seq[ResultRow] = {
-    def optL(r: Row, c: String): Option[Long] =
-      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getLong(r.fieldIndex(c)))
-    def optD(r: Row, c: String): Option[Double] =
-      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getDouble(r.fieldIndex(c)))
-    def optS(r: Row, c: String): Option[String] =
-      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getString(r.fieldIndex(c)))
+  /** Null-aware read of column `i` of a collected row. */
+  private def opt[T](r: Row, i: Int): Option[T] =
+    if (r.isNullAt(i)) None else Some(r.getAs[T](i))
+
+  private def collectResults(df: DataFrame): Seq[ResultRow] =
     df.select(col("id"), col("score"), col("source"), col("text"),
         col("metadata"), col("actor_id"), col("role"),
         coalesce(col("memory_type"), lit(MemoryTypes.Default)).as("memory_type"),
@@ -1606,13 +1370,10 @@ final class MemoryManager(
       .collect()
       .map { r =>
         ResultRow(r.getLong(0), r.getString(3), r.getDouble(1), r.getString(2),
-          optS(r, "metadata"), optS(r, "actor_id"), optS(r, "role"),
-          r.getString(r.fieldIndex("memory_type")),
-          optL(r, "created_at"), optL(r, "learned_at"), optS(r, "session_id"),
-          optL(r, "expired_at"), optL(r, "valid_at"), optL(r, "invalid_at"),
-          optD(r, "importance"), optL(r, "access_count"))
+          opt(r, 4), opt(r, 5), opt(r, 6), r.getString(7),
+          opt(r, 8), opt(r, 9), opt(r, 10), opt(r, 11), opt(r, 12), opt(r, 13),
+          opt(r, 14), opt(r, 15))
       }.toSeq
-  }
 
   // ------------------------------------------------------------------
   // other entry points
@@ -1683,7 +1444,7 @@ final class MemoryManager(
   def deleteAll(): Long =
     tracer.span("memory.delete_all", Map("user" -> config.userId)) {
       usageIncr("delete_all")
-      store.deleteMemoriesWhere(FilterOps.scopeFilter(config.scopeFilters))
+      store.deleteMemoriesWhere(memoryScope)
     }
 
   /** W12 — set_importance with [0,1] validation (manager.py:2016-2028). */
@@ -1705,16 +1466,14 @@ final class MemoryManager(
     store.history.filter(col("memory_id") === id)
       .orderBy(col("timestamp").asc, col("id").asc)
       .collect()
-      .map { r =>
-        def s(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))
-        HistoryEntry(r.getString(2), r.getLong(1).toString, r.getLong(3),
-          s(4), s(5), s(6), s(7))
-      }.toSeq
+      .map(r => HistoryEntry(r.getString(2), r.getLong(1).toString, r.getLong(3),
+        opt(r, 4), opt(r, 5), opt(r, 6), opt(r, 7)))
+      .toSeq
   }
 
   /** S11 — stats scan (manager.py:1926-2014). */
   def stats(): MemoryStats = tracer.span("memory.stats") {
-    val m = scopeCol(store.memories)
+    val m = store.memories.filter(memoryScope)
     val typed = m.filter(col("expired_at").isNull)
       .groupBy(coalesce(col("memory_type"), lit(MemoryTypes.Default)).as("t"))
       .agg(count(lit(1)).as("n")).collect()
@@ -1724,12 +1483,12 @@ final class MemoryManager(
       semanticCount = typed.getOrElse(MemoryTypes.Semantic, 0L),
       proceduralCount = typed.getOrElse(MemoryTypes.Procedural, 0L),
       episodicCount = typed.getOrElse(MemoryTypes.Episodic, 0L),
-      entityCount = scopeCol2(store.entities).count(),
+      entityCount = store.entities.filter(entityScope).count(),
       // relation count scoped through the src entity's owner — a raw
       // edge-type count would leak cross-tenant relations on a shared
       // store (the reference scopes by graph_name, manager.py:1964-1974)
       relationCount = store.edges.filter(col("edge_type") === EdgeTypes.Relation)
-        .join(scopeCol2(store.entities).select(col("id").as("src")), Seq("src"))
+        .join(store.entities.filter(entityScope).select(col("id").as("src")), Seq("src"))
         .count(),
       episodeCount = store.episodes.filter(col("user_id") === config.userId).count(),
       communityCount = store.communities.filter(col("user_id") === config.userId).count(),
@@ -1754,15 +1513,13 @@ final class MemoryManager(
           reverse = rev)
         .select(col("node"))
         .distinct()
-        .join(scopeCol(store.memories), col("node") === col("id"))
+        .join(store.memories.filter(memoryScope), col("node") === col("id"))
         .orderBy(col("created_at").asc, col("id").asc)
         .select(col("id"), col("text"), col("created_at"), col("session_id"))
         .collect()
-        .map { r =>
-          ChainEntry(r.getLong(0).toString, r.getString(1),
-            if (r.isNullAt(2)) None else Some(r.getLong(2)),
-            if (r.isNullAt(3)) None else Some(r.getString(3)))
-        }.toSeq
+        .map(r => ChainEntry(r.getLong(0).toString, r.getString(1),
+          opt(r, 2), opt(r, 3)))
+        .toSeq
     val fwd = if (direction == "forward" || direction == "both") leg(false) else Nil
     val bwd = if (direction == "backward" || direction == "both") leg(true) else Nil
     // "both" dedups across legs (forward occurrence wins) and sorts the
@@ -1852,14 +1609,13 @@ final class MemoryManager(
         col("produced"), col("ments"))
       .collect()
       .map { r =>
-        def optS(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))
         val produced =
           if (r.isNullAt(7)) Nil else r.getSeq[Long](7).map(_.toString).toSeq
         val mentioned =
           if (r.isNullAt(8)) Nil
           else r.getSeq[Row](8).map(_.getString(1)).toSeq
         EpisodeResult(r.getLong(0).toString, r.getString(1), r.getString(2),
-          r.getString(3), optS(4), optS(5), Some(r.getLong(6)),
+          r.getString(3), opt(r, 4), opt(r, 5), Some(r.getLong(6)),
           produced, mentioned)
       }.toSeq
   }

@@ -55,6 +55,26 @@ class EpisodeSpec extends SparkSuite {
     assert(m.getEpisodes(limit = 1).map(_.episodeId) == Seq("1"))
   }
 
+  test("episode MENTIONS edges point at the add's graph-scoped entity ids") {
+    // one user, two graphs, one shared store: each graph upserts its own
+    // "alice"; the g2 episode must mention g2's alice (id 2), not the
+    // lower-id same-named entity of g1
+    val store = new GraphStore(spark)
+    def mgr(graph: String) = new MemoryManager(spark,
+      MemoryConfig(userId = "alice", graphName = Some(graph), enableEpisodes = true),
+      store, new MockEmbedder(16),
+      new ScriptedExtractor(Seq(Extraction(Seq(s"alice is in $graph"),
+        Seq(ExtractedEntity("alice", "person")), Nil))),
+      new AddAllReconciler)
+    mgr("g1").add("Alice is in g1", now = Some(T0))
+    mgr("g2").add("Alice is in g2", now = Some(T0 + 1000))
+    def dsts(edgeType: String, src: Long) = store.edges
+      .filter(col("edge_type") === edgeType && col("src") === src)
+      .select("dst").collect().map(_.getLong(0)).toSeq
+    assert(dsts(EdgeTypes.HasEntity, 2L) == Seq(2L)) // memory 2 → g2's alice
+    assert(dsts(EdgeTypes.Mentions, 2L) == Seq(2L)) // episode 2 → g2's alice
+  }
+
   test("multiple facts from one add → ONE episode with multiple produced memories") {
     // reference tests/test_episodes.py test_multiple_facts_multiple_produced
     val m = new MemoryManager(spark,

@@ -59,9 +59,118 @@ class ManagerSpec extends SparkSuite {
     assert(m.history("1").map(_.event) == Seq("ADD"))
   }
 
+  /** Scripted extraction plus a fixed valid_at annotation per fact text. */
+  private def temporalExtractor(outputs: Seq[Extraction],
+      validAt: Map[String, Long]): Extractor = new Extractor {
+    private val scripted = new ScriptedExtractor(outputs)
+    override def extract(text: String): Extraction = scripted.extract(text)
+    override def annotateTemporal(facts: Seq[String]): Seq[TemporalAnnotation] =
+      facts.zipWithIndex.flatMap { case (f, i) =>
+        validAt.get(f).map(v => TemporalAnnotation(i, Some(v), None)) }
+  }
+
   test("empty facts → no events") {
     val m = mkManager(outputs = Seq(Extraction(Nil, Nil, Nil)))
     assert(m.add("hmm", now = Some(T0)).events.isEmpty)
+  }
+
+  test("add: an extraction without facts writes nothing, entities and relations included") {
+    val m = mkManager(outputs = Seq(Extraction(Nil,
+      Seq(ExtractedEntity("carol", "person"), ExtractedEntity("acme", "org")),
+      Seq(ExtractedRelation("carol", "acme", "works_at")))))
+    val v0 = m.store.writeVersion
+    assert(m.add("hmm", now = Some(T0)).events.isEmpty)
+    assert(m.store.writeVersion == v0)
+    assert(m.store.entities.isEmpty && m.store.edges.isEmpty)
+  }
+
+  test("add: session chain links from the call's own UPDATE-created memory") {
+    // _link_session_chain rule: the predecessor is the latest
+    // (created_at, id) non-expired chain memory outside the call's ADD
+    // ids — the seed is expired by this call's UPDATE, whose new memory
+    // (same session, same timestamp) becomes the predecessor
+    val m = mkManager(
+      outputs = Seq(Extraction(Seq("alice moved to rome", "alice likes pasta"), Nil, Nil)),
+      decisions = Seq(Seq(
+        Decision(DecisionAction.Update, "alice moved to rome", Some(1L)),
+        Decision(DecisionAction.Add, "alice likes pasta", None))),
+      config = MemoryConfig(userId = "alice", reconciliationThreshold = 0.0))
+    m.add("alice lives in paris", infer = false, sessionId = Some("s1"), now = Some(T0))
+    val r = m.add("Alice moved to Rome and likes pasta", sessionId = Some("s1"),
+      now = Some(T0 + 1000))
+    assert(r.events.map(e => (e.event, e.memoryId)) ==
+      Seq(("UPDATE", Some("2")), ("ADD", Some("3"))))
+    val lt = m.store.edges.filter(col("edge_type") === EdgeTypes.LeadsTo)
+      .select("src", "dst", "props").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getMap[String, String](2).toMap)).toSeq
+    assert(lt == Seq((2L, 3L, Map("sequence" -> "0"))))
+  }
+
+  test("add: one target expired twice in a call keeps the last bitemporal invalid_at") {
+    val (va, vb, vc) = (T0 - 5000, T0 - 3000, T0 - 1000)
+    val m = new MemoryManager(spark,
+      MemoryConfig(userId = "alice", enableBitemporal = true,
+        reconciliationThreshold = 0.0),
+      new GraphStore(spark), new MockEmbedder(16),
+      temporalExtractor(Seq(Extraction(Seq("fact a", "fact b", "fact c"), Nil, Nil)),
+        Map("fact a" -> va, "fact b" -> vb, "fact c" -> vc)),
+      new ScriptedReconciler(Seq(Seq(
+        Decision(DecisionAction.Update, "fact a", Some(1L)),
+        Decision(DecisionAction.Update, "fact b", Some(1L)),
+        Decision(DecisionAction.Delete, "", Some(1L))))))
+    m.add("seed", infer = false, now = Some(T0))
+    m.add("abc", now = Some(T0 + 1000))
+    val old = m.store.memories.filter(col("id") === 1)
+      .select("expired_at", "invalid_at").collect().head
+    assert(old.getLong(0) == T0 + 1000)
+    // the second UPDATE re-stamps invalid_at; the DELETE carries none
+    assert(old.getLong(1) == vb)
+    assert(m.history("1").map(_.event) == Seq("ADD", "DELETE"))
+  }
+
+  test("add: relation reconciliation consults the trait only with entities and existing triples") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val reconciler = new Reconciler {
+      override def reconcile(facts: Seq[String],
+          candidates: Seq[(Long, String)]): Seq[Decision] =
+        facts.map(f => Decision(DecisionAction.Add, f, None))
+      override def reconcileRelations(newRelations: Seq[ExtractedRelation],
+          existing: Seq[ExtractedRelation]): Seq[ExtractedRelation] = {
+        calls.incrementAndGet(); Nil
+      }
+    }
+    val (alice, acme) = (ExtractedEntity("alice", "p"), ExtractedEntity("acme", "o"))
+    val m = new MemoryManager(spark, MemoryConfig(userId = "alice"),
+      new GraphStore(spark), new MockEmbedder(16),
+      new ScriptedExtractor(Seq(
+        Extraction(Seq("alice works at acme"), Seq(alice, acme),
+          Seq(ExtractedRelation("alice", "acme", "works_at"))),
+        // relations without entities of their own are not stored
+        Extraction(Seq("alice knows acme"), Nil,
+          Seq(ExtractedRelation("alice", "acme", "knows"))),
+        Extraction(Seq("alice left acme"), Seq(alice, acme),
+          Seq(ExtractedRelation("alice", "acme", "left"))))),
+      reconciler)
+    def relTypes = m.store.edges.filter(col("edge_type") === EdgeTypes.Relation)
+      .select("props").collect().map(_.getMap[String, String](0)("relation_type"))
+      .toSeq.sorted
+    m.add("one", now = Some(T0))
+    assert(calls.get == 0) // no existing triples yet
+    m.add("two", now = Some(T0 + 1000))
+    assert(calls.get == 0 && relTypes == Seq("works_at"))
+    m.add("three", now = Some(T0 + 2000))
+    assert(calls.get == 1 && relTypes == Seq("left", "works_at"))
+  }
+
+  test("one add makes the same number of store mutations for 1 and 4 facts") {
+    def mutations(nFacts: Int): Long = {
+      val m = mkManager(outputs = Seq(Extraction((1 to nFacts).map(i => s"fact $i"),
+        Seq(ExtractedEntity("alice", "person")), Nil)))
+      val v0 = m.store.writeVersion
+      m.add("msg", sessionId = Some("s1"), now = Some(T0))
+      m.store.writeVersion - v0
+    }
+    assert(mutations(4) == mutations(1))
   }
 
   test("UPDATE supersede chain: expiry + SUPERSEDES + inherited entity edges + history") {
@@ -557,22 +666,35 @@ class ManagerSpec extends SparkSuite {
       Extraction(Seq("bob joined beta"), Seq(ExtractedEntity("bob", "person"),
         ExtractedEntity("beta", "org")), Nil),
       Extraction(Seq("alice moved on"), Seq(ExtractedEntity("alice", "person")), Nil),
-      Extraction(Seq("drop the second seed"), Nil, Nil))
-    // items 1-2 ADD, item 3 UPDATE target seed 1, item 4 DELETE seed 2 —
-    // all targets pre-batch, no intra-batch references
+      Extraction(Seq("drop the second seed"), Nil, Nil),
+      Extraction(Seq("seed three is stale", "carol joined"), Nil, Nil),
+      Extraction(Nil, Seq(ExtractedEntity("dave", "person")), Nil),
+      Extraction(Seq("four was early", "four was late"), Nil, Nil))
+    // items 1-2 ADD, item 3 UPDATE target seed 1, item 4 DELETE seed 2,
+    // item 5 UPDATE seed 3 then ADD (its UPDATE-created memory is the
+    // ADD's session-chain predecessor), item 6 has no facts (so no
+    // decisions and no entity), item 7 expires seed 4 twice with
+    // distinct valid_at annotations (the last invalid_at wins) — all
+    // targets pre-batch, no intra-batch references
     val decs = Seq(
       Seq(Decision(DecisionAction.Add, "alice works at acme", None)),
       Seq(Decision(DecisionAction.Add, "bob joined beta", None)),
       Seq(Decision(DecisionAction.Update, "alice moved on", Some(1L))),
-      Seq(Decision(DecisionAction.Delete, "", Some(2L))))
-    val texts = Seq("m1", "m2", "m3", "m4")
+      Seq(Decision(DecisionAction.Delete, "", Some(2L))),
+      Seq(Decision(DecisionAction.Update, "seed three is stale", Some(3L)),
+        Decision(DecisionAction.Add, "carol joined", None)),
+      Seq(Decision(DecisionAction.Update, "four was early", Some(4L)),
+        Decision(DecisionAction.Update, "four was late", Some(4L))))
+    val validAt = Map("four was early" -> (T0 + 100), "four was late" -> (T0 + 200))
+    val texts = Seq("m1", "m2", "m3", "m4", "m5", "m6", "m7")
 
     def build(batched: Boolean): GraphStore = {
       val store = new GraphStore(spark)
       val m = new MemoryManager(spark,
-        MemoryConfig(userId = "alice", reconciliationThreshold = 0.0),
+        MemoryConfig(userId = "alice", reconciliationThreshold = 0.0,
+          enableBitemporal = true),
         store, new MockEmbedder(16),
-        new ScriptedExtractor(exts), new ScriptedReconciler(decs))
+        temporalExtractor(exts, validAt), new ScriptedReconciler(decs))
       m.addBatch(seedTexts, now = Some(T0))
       if (batched)
         m.addReconcileBatch(texts, sessionId = Some("s1"), now = Some(T1))
@@ -584,7 +706,7 @@ class ManagerSpec extends SparkSuite {
     val batStore = build(batched = true)
 
     val memCols = Seq("id", "text", "created_at", "expired_at", "session_id",
-      "memory_type", "user_id")
+      "memory_type", "user_id", "valid_at", "invalid_at")
     def mems(s: GraphStore) = s.memories
       .select(memCols.head, memCols.tail: _*)
       .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString)
